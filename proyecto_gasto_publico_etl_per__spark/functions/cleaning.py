@@ -18,22 +18,22 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_WS = r"\s+"
+from .sqltext import sql_column
+
+#: PRJ5 as SQL text over one argument slot.  Collapse FIRST, then trim:
+#: ``trim`` removes only spaces (0x20), so a leading tab/newline must
+#: become a space before trimming or it survives one pass — Python's
+#: ``str.strip()`` (the reference, transformar_mensual.py:93) strips all
+#: whitespace in one go, and this order matches it.
+CLEAN_TEXT_SQL = (
+    "trim(regexp_replace(coalesce(CAST({0} AS STRING), ''), '\\\\s+', ' '))"
+)
 
 
 def clean_text(col: Column | str) -> Column:
-    """NULL-safe strip + whitespace-collapse (PRJ5).
-
-    Collapse FIRST, then trim: ``trim`` removes only spaces (0x20), so a
-    leading tab/newline must become a space before trimming or it
-    survives one pass — Python's ``str.strip()`` (the reference,
-    transformar_mensual.py:93) strips all whitespace in one go, and this
-    order matches it.  Property-tested idempotent over arbitrary unicode.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(
-        F.regexp_replace(F.coalesce(c.cast("string"), F.lit("")), _WS, " ")
-    )
+    """NULL-safe strip + whitespace-collapse (PRJ5): `CLEAN_TEXT_SQL`
+    as a Column.  Property-tested idempotent over arbitrary unicode."""
+    return sql_column(CLEAN_TEXT_SQL, col)
 
 
 def label_or_placeholder(col: Column | str, placeholder: str) -> Column:

@@ -22,23 +22,29 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Separator unlikely to occur in key text; prevents ("ab","c") == ("a","bc").
-_SEP = "\x1f"
+from .sqltext import sql_column
+
+#: One natural-key part as SQL text: a trimmed string, NULL as the empty
+#: string (the loader's key normalization, cargar_postgres.py:120-123).
+KEY_TEXT_SQL = "coalesce(trim(CAST({0} AS STRING)), '')"
+
+
+def surrogate_key_sql(*parts: str) -> str:
+    """SQL text of the stable 64-bit surrogate id over the SQL
+    expressions ``parts``: xxhash64 of the `KEY_TEXT_SQL` parts joined
+    by U+001F, a separator unlikely to occur in key text, so that
+    ("ab","c") != ("a","bc")."""
+    keys = ", ".join(KEY_TEXT_SQL.format(p) for p in parts)
+    return f"xxhash64(concat_ws('\\u001f', {keys}))"
 
 
 def surrogate_key(*cols: Column | str) -> Column:
-    """Stable 64-bit surrogate id from a natural key.
-
-    Key parts are trimmed strings (matching the loader's key normalization,
-    cargar_postgres.py:120-123); NULL parts hash as the empty string so a
-    NULL and a missing column don't collide with real values accidentally
-    shifting positions.
-    """
-    parts = []
-    for c in cols:
-        col = F.col(c) if isinstance(c, str) else c
-        parts.append(F.coalesce(F.trim(col.cast("string")), F.lit("")))
-    return F.xxhash64(F.concat_ws(_SEP, *parts))
+    """Stable 64-bit surrogate id from a natural key (`surrogate_key_sql`
+    as a Column).  NULL parts hash as the empty string, so a NULL and a
+    missing column don't collide with real values accidentally shifting
+    positions."""
+    slots = [f"{{{i}}}" for i in range(len(cols))]
+    return sql_column(surrogate_key_sql(*slots), *cols)
 
 
 def hex_hash32(col: Column | str, seed: int = 0) -> Column:

@@ -35,7 +35,7 @@ GOPHER_MAX_ELLIPSIS_RATIO = 0.3
 _BKT_CHARS = 2
 
 
-def _tokens(c: Column) -> Column:
+def _tokens(c: Column | str) -> Column:
     cleaned = clean_text(c)
     return F.when(F.length(cleaned) == 0, F.array().cast("array<string>")).otherwise(
         F.split(F.lower(cleaned), " ")
@@ -64,7 +64,7 @@ def gopher_rules(
     map-only signal operators into a single-scan curation profile).
     """
     raw = F.coalesce(F.col(text_col), F.lit(""))
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(text_col)
     n_tokens = F.size(toks)
     n_unique = F.size(F.array_distinct(toks))
     frac_unique = F.when(n_tokens > 0, n_unique.cast("double") / n_tokens.cast("double")).otherwise(F.lit(0.0))
@@ -137,7 +137,7 @@ def unigram_freq_score(
     join (the engine's allowlisted scalar pattern).
     """
     base = fan_out(df).select(
-        F.col(id_col).alias("doc"), _tokens(F.col(text_col)).alias("toks")
+        F.col(id_col).alias("doc"), _tokens(text_col).alias("toks")
     )
     posts = base.select("doc", F.explode("toks").alias("tok"))
     vocab = posts.groupBy("tok").agg(F.count("*").cast("bigint").alias("cnt"))
@@ -322,7 +322,7 @@ def mixture_fill(
         alloc_expr = F.when(
             F.col(lang_col) == lang, F.lit(int(budget))
         ).otherwise(alloc_expr)
-    n_tokens = F.size(_tokens(F.col(text_col))).cast("bigint")
+    n_tokens = F.size(_tokens(text_col)).cast("bigint")
     h = F.md5(F.col(id_col).cast("string"))
     base = df.select(
         F.col(id_col),
@@ -480,7 +480,7 @@ def bigram_fluency_score(
     """
     Q = 1_000_000_000
     base = fan_out(df).select(
-        F.col(id_col).alias("doc"), _tokens(F.col(text_col)).alias("toks")
+        F.col(id_col).alias("doc"), _tokens(text_col).alias("toks")
     )
     pairs = base.where(F.size("toks") >= 2).select(
         "doc",
@@ -554,7 +554,7 @@ def _hashed_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     buckets (the portable-across-engines hash used everywhere else).
     Every column of ``df`` other than ``text_col`` rides along, so
     callers never re-join the posting list against the doc table."""
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(text_col)
     carried = [c for c in df.columns if c not in (id_col, text_col)]
     base = df.select(
         F.col(id_col).alias("doc"), toks.alias("toks"), *carried

@@ -30,27 +30,34 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import surrogate_key
+from ..functions.hashing import KEY_TEXT_SQL, surrogate_key_sql
+from ..functions.sqltext import ident
 from ..schema import DIMENSIONS, FACT_FKS, METRICS, Dim
+
+
+def _key_sql(dim: Dim, col: str) -> str:
+    """SQL text of one natural-key column normalized for comparison."""
+    if col in dim.int_keys:
+        return f"try_cast({ident(col)} AS INT)"
+    return KEY_TEXT_SQL.format(ident(col))
 
 
 def normalize_key_cols(df: DataFrame, dim: Dim) -> DataFrame:
     """Key-type normalization at join time (cargar_postgres.py:120-123):
     every key compared as a trimmed string, except declared int keys
     (``tipo_transaccion``, L:214) compared numerically.  Replicating this
-    exactly is what keeps joins from silently missing (SURVEY.md §7.4)."""
-    out = df
-    for k in dim.key:
-        if k in dim.int_keys:
-            out = out.withColumn(k, F.col(k).try_cast("int"))
-        else:
-            # NULL → "" like the loader's string normalization — otherwise a
-            # NULL key never equals itself in the upsert anti-join and the
-            # same dim row re-appends on every load
-            out = out.withColumn(
-                k, F.coalesce(F.trim(F.col(k).cast("string")), F.lit(""))
-            )
-    return out
+    exactly is what keeps joins from silently missing (SURVEY.md §7.4).
+
+    NULL → "" like the loader's string normalization — otherwise a NULL
+    key never equals itself in the upsert anti-join and the same dim row
+    re-appends on every load.  One projection of SQL text."""
+    keys = set(dim.key)
+    return df.selectExpr(
+        *[
+            f"{_key_sql(dim, c)} AS {ident(c)}" if c in keys else ident(c)
+            for c in df.columns
+        ]
+    )
 
 
 def extract_dim(records: DataFrame, dim: Dim) -> DataFrame:
@@ -60,11 +67,15 @@ def extract_dim(records: DataFrame, dim: Dim) -> DataFrame:
     but keeps attributes too, first-writer-wins on duplicates via max —
     deterministic, unlike pandas drop_duplicates order dependence.
     """
-    base = normalize_key_cols(records.select(*dim.columns), dim)
-    agg = [F.max(a).alias(a) for a in dim.attrs]
+    base = records.selectExpr(
+        *[f"{_key_sql(dim, k)} AS {ident(k)}" for k in dim.key],
+        *[ident(a) for a in dim.attrs],
+    )
+    agg = [F.expr(f"max({ident(a)}) AS {ident(a)}") for a in dim.attrs]
     deduped = base.groupBy(*dim.key).agg(*agg) if agg else base.distinct()
-    return deduped.select(
-        surrogate_key(*dim.key).alias(dim.id_col), *dim.columns
+    return deduped.selectExpr(
+        f"{surrogate_key_sql(*[ident(k) for k in dim.key])} AS {ident(dim.id_col)}",
+        *[ident(c) for c in dim.columns],
     )
 
 
@@ -85,12 +96,13 @@ def upsert_dim(
     # null-safe equality: an int key may legitimately be NULL (e.g. a dim
     # whose raw column is absent); NULL must match NULL or the row
     # re-appends forever
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"inc.{k}").eqNullSafe(F.col(f"ex.{k}")) for k in keys],
+    cond = F.expr(
+        " AND ".join(f"inc.{ident(k)} <=> ex.{ident(k)}" for k in keys)
     )
     new_rows = inc.join(F.broadcast(ex), cond, "left_anti")
-    return existing.unionByName(new_rows.select(existing.columns))
+    return existing.unionByName(
+        new_rows.selectExpr(*[ident(c) for c in existing.columns])
+    )
 
 
 def resolve_fks(
@@ -103,20 +115,27 @@ def resolve_fks(
     stored dim state is needed: the id is computed inline.  (The stored dims
     exist to serve attributes at query time, not to mint ids — this is what
     deletes the reference's per-batch read-dim/insert/re-read cycle.)
+
+    One projection: every key column normalized in place, each dim's id
+    appended as the surrogate key over its normalized keys.
     """
-    out = records
-    for dim in dims:
-        out = normalize_key_cols(out, dim)
-        out = out.withColumn(dim.id_col, surrogate_key(*dim.key))
-    return out
+    key_sql = {k: _key_sql(dim, k) for dim in dims for k in dim.key}
+    ids = [
+        f"{surrogate_key_sql(*[key_sql[k] for k in dim.key])} AS {ident(dim.id_col)}"
+        for dim in dims
+    ]
+    return records.selectExpr(
+        *[
+            f"{key_sql[c]} AS {ident(c)}" if c in key_sql else ident(c)
+            for c in records.columns
+        ],
+        *ids,
+    )
 
 
 def fk_complete_filter(df: DataFrame, fks: Sequence[str] = FACT_FKS) -> DataFrame:
     """FLT6 — keep rows with all FKs resolved (cargar_postgres.py:365-372)."""
-    pred: Column = reduce(
-        lambda a, b: a & b, [F.col(k).isNotNull() for k in fks]
-    )
-    return df.filter(pred)
+    return df.where(" AND ".join(f"{ident(k)} IS NOT NULL" for k in fks))
 
 
 def consolidate(
@@ -129,7 +148,7 @@ def consolidate(
     hash aggregate; with AQE the shuffle partition count adapts to the
     actual grain cardinality."""
     return df.groupBy(*grain).agg(
-        *[F.sum(m).alias(m) for m in metrics]
+        *[F.expr(f"sum({ident(m)}) AS {ident(m)}") for m in metrics]
     )
 
 

@@ -30,7 +30,7 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 _CJK_PATTERN = "[\\u4e00-\\u9fff]"
 
 
-def _padded(col: Column) -> Column:
+def _padded(col: Column | str) -> Column:
     return F.concat(F.lit(" "), F.lower(clean_text(col)), F.lit(" "))
 
 
@@ -51,7 +51,7 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-language marker counts + CJK char count."""
     from ..sources.tables import fan_out
 
-    padded = _padded(F.col(text_col))
+    padded = _padded(text_col)
     out = fan_out(df)
     for lang, words in LANG_MARKERS.items():
         score = None
@@ -124,11 +124,10 @@ def quality_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     from ..sources.tables import fan_out
 
     df = fan_out(df)
-    c = F.col(text_col)
-    cleaned = clean_text(c)
+    cleaned = clean_text(text_col)
     n_chars = F.length(cleaned)
-    n_tokens = token_count(c)
-    padded = _padded(c)
+    n_tokens = token_count(text_col)
+    padded = _padded(text_col)
     stop = None
     for w in LANG_MARKERS["en"]:
         cnt = _count_occurrences(padded, w)
@@ -186,8 +185,7 @@ def shingle_fingerprint(col: Column | str, n: int = 8) -> Column:
     character ``n``-gram shingles of the cleaned lowercase text (winnowing
     with window = whole doc).  Robust to local edits, engine-portable
     (md5-prefix hashing, functions/hashing.py)."""
-    c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.lower(clean_text(c))
+    cleaned = F.lower(clean_text(col))
     starts = F.sequence(
         F.lit(1), F.greatest(F.length(cleaned) - (n - 1), F.lit(1))
     )
@@ -229,8 +227,7 @@ def winnow_fingerprints(
     """
     from ..sources.tables import fan_out
 
-    c = F.col(text_col)
-    cleaned = F.lower(clean_text(c))
+    cleaned = F.lower(clean_text(text_col))
     n_kgrams = F.greatest(F.length(cleaned) - (k - 1), F.lit(1))
     hashes = F.transform(
         F.sequence(F.lit(1), n_kgrams),

@@ -43,6 +43,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .retrieval import _as_local_path, _local_roots
+
 #: posting-zone partition fan-out — constant under vocab/corpus growth
 N_TRI_BUCKETS = 64
 
@@ -101,6 +103,7 @@ def build_trigram_index(
         root = tempfile.mkdtemp(prefix="trigram_index_") + "/zones"
         mode = "errorifexists"
     else:
+        root = _as_local_path(root)
         # epoch-scoped rebuild: clear any STALE tombstones zone too —
         # the zone writes below overwrite their own dirs, but
         # tombstones are written by delete_from_trigram_index, and a
@@ -170,6 +173,7 @@ def delete_from_trigram_index(
     rewrite.  Serving anti-joins candidates against the union of all
     roots' tombstones; `compact_trigram_index` later folds them out
     physically.  Returns the batch's id count."""
+    roots = _local_roots(roots)
     doc_ids = ids.select(
         F.col(ids.columns[0]).cast("long").alias("doc_id")
     ).distinct()
@@ -192,6 +196,7 @@ def compact_trigram_index(
 
     if not roots:
         raise ValueError("compact_trigram_index: need at least one root")
+    roots, out_root = _local_roots(roots), _as_local_path(out_root)
     out_real = os.path.realpath(out_root)
     for r in roots:
         r_real = os.path.realpath(r)
@@ -230,7 +235,10 @@ def trigram_candidates(
     trigrams — the exact candidate superset.  The postings read is
     partition-pruned to the trigrams' buckets and row-group-pruned by
     the ``tri IN`` predicate; the doc-grouped count is one hash agg
-    over |postings(trigrams)| rows."""
+    over |postings(trigrams)| rows.  Roots may be spelled as ``file:``
+    URIs (`retrieval._as_local_path`): the tombstone probe is a local
+    directory check."""
+    roots = _local_roots(roots)
     tris = needle_trigrams(needle)
     if not tris:
         raise ValueError(

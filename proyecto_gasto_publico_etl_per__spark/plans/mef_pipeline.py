@@ -22,21 +22,53 @@ Parquet tables:
 Scale: the fact is partitioned by ``anio`` so every year-filtered query
 prunes partitions; dims stay broadcast-sized; the only wide shuffle in the
 load is the grain consolidation.
+
+Driver cost.  Every projection is SQL text (a few Py4J calls per step,
+however many columns), and every read of a warehouse table takes its
+schema from the parquet footer (``sources.parquet_source.
+read_spark_parquet``), so the only Spark jobs are the ones that move
+data.  Jobs per step, with AQE on:
+
+- ``transform``: the CSV corruption audit (one aggregate scan) and the
+  partitioned write.
+- ``load_frame``: ``dim_tiempo`` is a constant calendar, written only
+  when absent (one job, first load only).  Each of the 7 dims costs its
+  dedup aggregate and its write; an existing dim adds the broadcast of
+  the stored rows its anti-join reads.  The fact costs the batch's year
+  probe and the checkpoint of the merged partitions before they are
+  overwritten (existing fact only), the grain consolidation, and the
+  write.
+- ``materialize_agg_mensual``: the broadcast dims and the aggregate's
+  stages; no schema inference.
+- ``register_views``: no job.
+
+Staged dim swap.  A dim upsert reads the stored dim and writes the
+merged rows to a sibling staging directory (``.<dim>.staging``), then
+renames it into place: the old directory is renamed aside, the staged
+one takes its name, and the old one is deleted.  The write never
+overwrites the directory it reads, so no checkpoint is needed, and a
+crash mid-write leaves the stored dim intact (a leftover staging
+directory is overwritten by the next load; a dim left renamed aside
+between the two renames is put back before the next load reads it).
+A dim's first write goes straight to its path.
 """
 
 from __future__ import annotations
 
+import shutil
 from collections.abc import Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import ident
 from ..operators import normalize, star
 from ..operators.timedim import build_time_dim
 from ..schema import DIMENSIONS, FACT_FKS, METRICS, raw_name
 from ..schema_comments import with_column_comments
 from ..sources.csv_source import read_monthly_csv
+from ..sources.parquet_source import read_spark_parquet
 from . import views as V
 
 #: raw UPPER column → star snake column.  The reference's PRJ7 rename
@@ -78,17 +110,49 @@ def transform(
 
 
 def _star_records(normalized: DataFrame) -> DataFrame:
-    """PRJ7: rename to star vocabulary and attach tiempo_id."""
-    renamed = normalized.select(
+    """PRJ7: rename to star vocabulary and attach tiempo_id, in one
+    projection."""
+    present = set(normalized.columns)
+    return normalized.selectExpr(
         *[
-            F.col(raw).alias(snake)
+            f"{ident(raw)} AS {ident(snake)}"
             for raw, snake in RENAME_MAP.items()
-            if raw in normalized.columns
-        ]
+            if raw in present
+        ],
+        "CAST(`ANO_EJE` AS BIGINT) * 100 + `MES_EJE` AS tiempo_id",
     )
-    return renamed.withColumn(
-        "tiempo_id", F.col("anio").cast("long") * 100 + F.col("mes")
+
+
+def _staging(path: Path) -> tuple[Path, Path]:
+    """(staging, retired) siblings of a dim directory for the swap."""
+    return (
+        path.with_name(f".{path.name}.staging"),
+        path.with_name(f".{path.name}.retired"),
     )
+
+
+def _stored_dim(spark: SparkSession, path: Path) -> DataFrame | None:
+    """The stored dim, or None before its first write.  A dim that a
+    crash left renamed aside, between the swap's two renames, is put
+    back first."""
+    _, retired = _staging(path)
+    if not path.exists() and retired.exists():
+        retired.rename(path)
+    return read_spark_parquet(spark, path) if path.exists() else None
+
+
+def _write_dim(df: DataFrame, path: Path, staged: bool) -> None:
+    """Write a dim; ``staged`` writes a sibling staging directory and
+    swaps it into place (see the module docstring)."""
+    if not staged:
+        df.write.mode("overwrite").parquet(str(path))
+        return
+    staging, retired = _staging(path)
+    df.write.mode("overwrite").parquet(str(staging))
+    shutil.rmtree(retired, ignore_errors=True)
+    path.rename(retired)
+    staging.rename(path)
+    shutil.rmtree(retired)
 
 
 def load(
@@ -110,34 +174,31 @@ def load_frame(
     """The load stage on an already-materialized normalized frame — shared
     by the batch CLI and the streaming loader's per-micro-batch handler."""
     wh = Path(warehouse)
-    # business-meaning column comments (CreacionDBOrigen.sql:75-137) ride
-    # along as field metadata into every dim/fact parquet written below
-    records = with_column_comments(_star_records(normalized))
+    records = _star_records(normalized)
 
-    time_dim = with_column_comments(build_time_dim(spark))
-    time_dim.write.mode("overwrite").parquet(str(wh / "dim_tiempo"))
+    time_path = wh / "dim_tiempo"
+    if not time_path.exists():
+        # business-meaning column comments (CreacionDBOrigen.sql:75-137)
+        # ride along as field metadata; the calendar's survive into the
+        # parquet and the serving views (the dim/fact columns are derived
+        # expressions, which carry no field metadata)
+        time_dim = with_column_comments(build_time_dim(spark))
+        time_dim.write.mode("overwrite").parquet(str(time_path))
 
     for dim in DIMENSIONS:
         incoming = star.extract_dim(records, dim)
         dim_path = wh / dim.name
-        existing = (
-            spark.read.parquet(str(dim_path)) if dim_path.exists() else None
-        )
+        existing = _stored_dim(spark, dim_path)
         merged = star.upsert_dim(existing, incoming, dim.key)
-        # localCheckpoint: materialize before overwriting the directory we
-        # just read from (classic read-modify-write hazard)
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            str(dim_path)
-        )
+        _write_dim(merged, dim_path, staged=existing is not None)
 
     resolved = star.resolve_fks(records, DIMENSIONS)
     complete = star.fk_complete_filter(
         resolved, [d.id_col for d in DIMENSIONS]
     )
     fact_cols = [*FACT_FKS, *METRICS, "anio"]
-    batch = complete.select(
-        *[c for c in fact_cols if c in complete.columns]
-    )
+    present = set(complete.columns)
+    batch = complete.select(*[c for c in fact_cols if c in present])
     fact_path = wh / "fact_gasto_mensual"
     if fact_path.exists():
         # partition-scoped upsert: the grain anti-join only needs the
@@ -147,7 +208,7 @@ def load_frame(
         years = [
             r.anio for r in batch.select("anio").distinct().collect()
         ]
-        existing_fact = spark.read.parquet(str(fact_path)).filter(
+        existing_fact = read_spark_parquet(spark, fact_path).filter(
             F.col("anio").isin(years)
         )
     else:
@@ -155,12 +216,16 @@ def load_frame(
     merged = star.append_fact(
         existing_fact, batch, grain=[*FACT_FKS, "anio"], metrics=METRICS
     )
+    if existing_fact is not None:
+        # materialize before overwriting the partitions just read from
+        # (classic read-modify-write hazard)
+        merged = merged.localCheckpoint(eager=True)
     # dynamic partition overwrite rewrites ONLY the affected anio
     # partitions; untouched years keep their files byte-for-byte
-    merged.localCheckpoint(eager=True).write.mode("overwrite").option(
+    merged.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("anio").parquet(str(fact_path))
-    return spark.read.parquet(str(fact_path))
+    return read_spark_parquet(spark, fact_path)
 
 
 def streaming_load(
@@ -198,6 +263,16 @@ def streaming_load(
     return query
 
 
+def _read_star(spark: SparkSession, warehouse: str):
+    """(fact, dim_tiempo, {dim name: dim}) of a warehouse, read job-free."""
+    wh = Path(warehouse)
+    return (
+        read_spark_parquet(spark, wh / "fact_gasto_mensual"),
+        read_spark_parquet(spark, wh / "dim_tiempo"),
+        {d.name: read_spark_parquet(spark, wh / d.name) for d in DIMENSIONS},
+    )
+
+
 def materialize_agg_mensual(
     spark: SparkSession,
     warehouse: str,
@@ -220,15 +295,10 @@ def materialize_agg_mensual(
     ``load_frame`` already knows the loaded years (its own partition
     scoping); pass them straight through.
     """
-    wh = Path(warehouse)
-    fact = spark.read.parquet(str(wh / "fact_gasto_mensual"))
+    fact, time_dim, dims = _read_star(spark, warehouse)
     if years is not None:
         # lands on the partition column → file pruning at the scan
         fact = fact.filter(F.col("anio").isin([int(y) for y in years]))
-    time_dim = spark.read.parquet(str(wh / "dim_tiempo"))
-    dims = {
-        d.name: spark.read.parquet(str(wh / d.name)) for d in DIMENSIONS
-    }
     agg = V.vw_gasto_agregado_mensual_star(fact, time_dim, dims)
     agg.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
@@ -237,12 +307,7 @@ def materialize_agg_mensual(
 
 def register_views(spark: SparkSession, warehouse: str) -> DataFrame:
     """Serve stage: register vw_gasto_mensual / agregado views (V:21-196)."""
-    wh = Path(warehouse)
-    fact = spark.read.parquet(str(wh / "fact_gasto_mensual"))
-    time_dim = spark.read.parquet(str(wh / "dim_tiempo"))
-    dims = {
-        d.name: spark.read.parquet(str(wh / d.name)) for d in DIMENSIONS
-    }
+    fact, time_dim, dims = _read_star(spark, warehouse)
     # serve the FACT's anio (the partition column) and the calendar's
     # mes/trimestre: a year predicate on the view then lands on the
     # partition column and prunes fact files; the dropped calendar anio

@@ -13,6 +13,9 @@ same as a psql user running ``\\d+`` against the reference.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from .functions.sqltext import ident
 
 #: star column → business description (CreacionDBOrigen.sql:75-137).
 COLUMN_COMMENTS: dict[str, str] = {
@@ -98,11 +101,14 @@ COLUMN_COMMENTS: dict[str, str] = {
 def with_column_comments(
     df: DataFrame, comments: dict[str, str] = COLUMN_COMMENTS
 ) -> DataFrame:
-    """Attach the business comment to every matching column's metadata.
-    Parquet round-trips Spark field metadata, so warehouse tables keep
-    their documentation."""
-    for col in df.columns:
-        c = comments.get(col)
-        if c is not None:
-            df = df.withMetadata(col, {"comment": c})
-    return df
+    """Attach the business comment to every matching column's metadata,
+    in one projection.  Parquet round-trips Spark field metadata, so
+    warehouse tables keep their documentation."""
+    return df.select(
+        *[
+            F.col(ident(c)).alias(c, metadata={"comment": comments[c]})
+            if c in comments
+            else F.col(ident(c))
+            for c in df.columns
+        ]
+    )

@@ -23,6 +23,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
+    # pinned, not inherited: junk-to-number coercion is explicit try_cast
+    # everywhere, and an overflowing sum must raise rather than wrap
+    "spark.sql.ansi.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     # dims in this engine are broadcast-sized by construction (SURVEY.md §1.4);

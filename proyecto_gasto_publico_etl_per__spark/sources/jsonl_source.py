@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.sqltext import ident
+
 #: the documents-table shape (TESTDATA.md) — the default corpus schema
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -75,13 +77,11 @@ def corruption_stats(df: DataFrame) -> tuple[int, int]:
     that corruption detection requires; the counts themselves are free.
     """
     others = [c for c in df.columns if c != CORRUPT_COL]
-    row = df.agg(
-        F.count("*").alias("total"),
-        F.count(F.col(CORRUPT_COL)).alias("bad"),
-        *[
-            F.count(F.col(c)).alias(f"_w{i}")
-            for i, c in enumerate(others)
-        ],
+    # one SQL-text projection: a global aggregate planned in one call
+    row = df.selectExpr(
+        "count(*) AS total",
+        f"count({ident(CORRUPT_COL)}) AS bad",
+        *[f"count({ident(c)}) AS _w{i}" for i, c in enumerate(others)],
     ).collect()[0]
     return int(row["total"]), int(row["bad"])
 

@@ -9,13 +9,26 @@
 - ``mode="ignore"`` reproduces the skip-if-exists idempotency gate
   (etl/transformar_mensual.py:121-123); ``overwrite`` the ``--overwrite``
   flag.
+- Tables the engine wrote itself read through `read_spark_parquet`: the
+  schema comes from the Spark row-metadata key in the first data file's
+  footer, read driver-side with pyarrow, so the read launches no Spark
+  job (``spark.read.parquet`` runs one to infer the same schema).
 """
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Sequence
+from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+#: footer key under which Spark's parquet writer stores the row schema
+#: (names, types, nullability and field metadata)
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def read_parquet(
@@ -85,3 +98,62 @@ def read_table(
     if columns:
         df = df.select(*columns)
     return df
+
+
+def _first_data_file(root: Path) -> Path:
+    """The first data file under ``root`` in sorted walk order, skipping
+    the ``_``/``.`` entries Spark's readers skip (``_SUCCESS``, ``.crc``,
+    staging directories)."""
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
+        for name in sorted(filenames):
+            if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                return Path(dirpath) / name
+    raise ValueError(f"read_spark_parquet: no parquet data file under {root}")
+
+
+def _partition_field(segment: str, root: Path) -> T.StructField:
+    """A hive-style ``name=value`` directory as the partition column Spark's
+    discovery infers for the integer keys the engine partitions by."""
+    name, _, value = segment.partition("=")
+    try:
+        v = int(value)
+    except ValueError:
+        raise ValueError(
+            f"read_spark_parquet: partition directory {segment!r} under "
+            f"{root} is not an integer key"
+        ) from None
+    kind = T.IntegerType() if -(2**31) <= v < 2**31 else T.LongType()
+    return T.StructField(name, kind, True)
+
+
+def footer_schema(path: str | Path) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, without a job:
+    the data columns from the first data file's Spark row metadata (all
+    nullable, as a file source reads them), then the partition columns
+    named by that file's ``name=value`` directories.  Raises when the
+    footer lacks the Spark key (a file some other writer produced)."""
+    root = Path(path)
+    first = _first_data_file(root)
+    meta = pq.read_metadata(first).metadata or {}
+    raw = meta.get(SPARK_ROW_METADATA)
+    if raw is None:
+        raise ValueError(
+            f"read_spark_parquet: {first} has no Spark row metadata "
+            f"({SPARK_ROW_METADATA.decode()}); read it with spark.read.parquet"
+        )
+    data = T.StructType.fromJson(json.loads(raw))
+    parts = [
+        _partition_field(seg, root)
+        for seg in first.parent.relative_to(root).parts
+    ]
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True, f.metadata) for f in data]
+        + parts
+    )
+
+
+def read_spark_parquet(spark: SparkSession, path: str | Path) -> DataFrame:
+    """Read a Spark-written parquet table with its `footer_schema`:
+    the same frame as ``spark.read.parquet``, with no schema-inference job."""
+    return spark.read.schema(footer_schema(path)).parquet(str(path))

@@ -233,6 +233,23 @@ def test_delete_equals_rebuild_on_remaining(spark, corpus):
     assert _served(spark, [folded], "window sc", docs) == want
 
 
+def test_file_uri_roots_honour_tombstones(spark, tmp_path):
+    """A root spelled ``file://`` must see the tombstones a plain-path
+    delete wrote: the deleted doc stays deleted, as in the BM25 and ANN
+    lanes (`retrieval._as_local_path`), and other schemes fail loudly."""
+    docs = spark.createDataFrame(
+        [(1, "hello world"), (2, "hello there")], "doc_id LONG, text STRING"
+    )
+    root = trigram.build_trigram_index(spark, docs, str(tmp_path / "zones"))
+    trigram.delete_from_trigram_index(
+        spark, [root], spark.createDataFrame([(1,)], "id LONG")
+    )
+    assert _served(spark, [root], "hello", docs) == [2]
+    assert _served(spark, ["file://" + root], "hello", docs) == [2]
+    with pytest.raises(ValueError, match="scheme"):
+        trigram.trigram_serve(spark, ["hdfs://nn" + root], "hello", docs)
+
+
 def test_compact_overlap_refused(spark, corpus):
     docs, _ = corpus
     root = trigram.build_trigram_index(spark, docs.limit(10))
